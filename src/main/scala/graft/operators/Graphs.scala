@@ -35,10 +35,14 @@ object Graphs {
   /** The loop-invariant frames every PageRank variant shares, each
     * truncated ONCE: the cast edge table (referenced by every round's
     * join — an untruncated upstream would re-execute per round), the
-    * node set and the out-degrees. */
+    * node set and the out-degrees. An edge with a null endpoint is
+    * dropped: a null id would become a node whose rank row the
+    * null-unsafe fixpoint probe can never match, so the adaptive loop
+    * would never converge. */
   private def prepGraph(edges: DataFrame,
       truncate: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val e = truncate(edges.select(col("src").cast("long"), col("dst").cast("long")))
+    val e = truncate(edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .where(col("src").isNotNull && col("dst").isNotNull))
     val nodes = truncate(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
     val outdeg = truncate(e.groupBy("src").agg(count(lit(1)).as("outdeg")))

@@ -102,26 +102,31 @@ object Similarity {
     var cent = seedCentroids(items, numCentroids)
     val it = items.select(col("vec_id").as("item_id"), VF.quantize(col("embedding")).as("qv"))
     for (_ <- 0 until iterations) {
-      val asg = assignNearestQ(it, cent, "item_id", "qv")
-      // element-wise floored mean per centroid: the per-dim sums ride
-      // ONE array-sum hash aggregate (native [[graft.functions
-      // .ArrayLongSumAgg]], map-side combine) instead of a posexplode
-      // + per-(cid, dim) aggregation + collect_list reassembly — one
-      // exchange per training round instead of two. floor(sum/cnt)
-      // stays double division then floor, bit-identical across engines
-      // for BIGINT sums (both use IEEE double division), and the sums
-      // array preserves dim order by construction.
-      cent = asg
-        .groupBy("cid")
-        .agg(VF.arraySumAgg(col("qv")).as("s"), count(lit(1)).as("cnt"))
-        .select(col("cid"),
-          transform(col("s"), x => floor(x / col("cnt")).cast("long")).as("cv"))
-        .withColumn("cn", VF.normSqQ(col("cv")))
+      cent = flooredMean(assignNearestQ(it, cent, "item_id", "qv"),
+        Seq("cid"), "qv", "cv", "cn")
     }
     val lists = assignNearestQ(it, cent, "item_id", "qv")
     val probes = assignProbes(queries, cent, "query_id", "q_qv", nProbe)
     probeAndRank(probes, lists, k)
   }
+
+  /** One Lloyd recompute: the element-wise floored mean of vector
+    * column `v` per `keys` group, as `out`, plus its squared norm as
+    * `norm`. The per-dim sums ride ONE array-sum hash aggregate
+    * (native [[graft.functions.ArrayLongSumAgg]], map-side combine)
+    * instead of a posexplode + per-(key, dim) aggregation +
+    * collect_list reassembly — one exchange per training round
+    * instead of two. floor(sum/cnt) stays double division then floor,
+    * bit-identical across engines for BIGINT sums (both use IEEE
+    * double division), and the sums array preserves dim order by
+    * construction. A null vector leaves both the sum and the divisor. */
+  private[operators] def flooredMean(asg: DataFrame, keys: Seq[String],
+      v: String, out: String, norm: String): DataFrame =
+    asg.groupBy(keys.map(col): _*)
+      .agg(VF.arraySumAgg(col(v)).as("s"), count(col(v)).as("cnt"))
+      .select(keys.map(col) :+
+        transform(col("s"), x => floor(x / col("cnt")).cast("long")).as(out): _*)
+      .withColumn(norm, VF.normSqQ(col(out)))
 
   /** Deterministic seed centroids: the first `numCentroids` item
     * vectors (a production deployment would persist k-means output —
@@ -143,9 +148,15 @@ object Similarity {
     * (tiny — centroid tables are metadata at any scale) scan stage
     * with NO exchange of its own; element order is irrelevant to the
     * downstream array_min. */
-  private def centArr(cent: DataFrame): DataFrame =
+  private def centArr(cent: DataFrame): DataFrame = {
+    // an empty table (the seed matched no vec_id < numCentroids) would
+    // fold to [] and array_min would assign every vector cid = null
+    val cents = collect_list(struct(col("cid"), col("cv"), col("cn")))
     cent.coalesce(1)
-      .agg(collect_list(struct(col("cid"), col("cv"), col("cn"))).as("cents"))
+      .agg(when(size(cents) > 0, cents)
+        .otherwise(raise_error(lit("IVF: empty centroid table (no vec_id < numCentroids)")))
+        .as("cents"))
+  }
 
   /** Nearest-centroid assignment as a MAP-SIDE expression (round 9):
     * the centroid table is folded to one array row, broadcast, and
@@ -281,15 +292,7 @@ object Similarity {
       // exchange per training round
       val asg = sub.join(broadcast(subCodebookArr(cb)), Seq("sub"))
         .select(col("sub"), codeArgmin("sv", "svn").as("code"), col("sv"))
-      // per-(subspace, code) floored mean via ONE array-sum hash
-      // aggregate — same recipe (and rationale) as the coarse
-      // [[ivfTopKKmeans]] round above
-      cb = asg
-        .groupBy("sub", "code")
-        .agg(VF.arraySumAgg(col("sv")).as("s"), count(lit(1)).as("cnt"))
-        .select(col("sub"), col("code"),
-          transform(col("s"), x => floor(x / col("cnt")).cast("long")).as("scv"))
-        .withColumn("scn", VF.normSqQ(col("scv")))
+      cb = flooredMean(asg, Seq("sub", "code"), "sv", "scv", "scn")
     }
     pqScoreAndRank(queries, it, items, k, numCentroids, nProbe, numSub,
       Dedup.defaultTruncate(cb))

@@ -1066,6 +1066,53 @@ class OperatorsSpec extends AnyFunSuite {
     assert(plain == Map(0L -> 1000000L, 1L -> 575000L, 2L -> 575000L), s"got $plain")
   }
 
+  test("pageRankAdaptive: an edge with a null endpoint is dropped, so the fixpoint probe still fires") {
+    import spark.implicits._
+    val cyc = Seq[(java.lang.Long, java.lang.Long)]((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L))
+    val (_, clean) = graft.operators.Graphs.pageRankAdaptive(cyc.toDF("src", "dst"), maxIterations = 6)
+    val (ranks, withNull) = graft.operators.Graphs.pageRankAdaptive(
+      (cyc :+ ((null, 2L): (java.lang.Long, java.lang.Long))).toDF("src", "dst"), maxIterations = 6)
+    assert(withNull == clean, s"null-id edge changed rounds_used: $withNull vs $clean")
+    assert(ranks.where($"id".isNull).isEmpty, "a null id must not become a node")
+  }
+
+  test("ivfTopKKmeans: a null vector leaves both the Lloyd sum and its divisor") {
+    // seeds c0 = [1000,0], c1 = [0,1000]; items 0 and 2 train c0 to
+    // [1000,0]. The null vector lands in c0's group too (its null d2
+    // sorts first); counted in the divisor it drags c0 to [666,0],
+    // which flips the nProbe=1 probe of q = [900,880] to list c1.
+    val items = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f)), (2L, Seq(1.0f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val withNull = items.union(Seq((9L, null: Seq[Float])).toDF("vec_id", "embedding"))
+    val q = Seq((50L, Seq(0.9f, 0.88f))).toDF("vec_id", "embedding")
+    def listed(it: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfTopKKmeans(q, it, k = 5, numCentroids = 2, nProbe = 1, iterations = 1)
+        .select("item_id").as[Long].collect().toSet - 9L
+    assert(listed(items) == Set(0L, 2L))
+    assert(listed(withNull) == listed(items))
+  }
+
+  test("flooredMean, PQ codebook shape: a null subvector leaves both the sum and its divisor") {
+    // the null row sits in code 0's group; counted in the divisor it
+    // would floor code 0 to [666,0] instead of [1000,0]
+    val asg = Seq((0, 0, Seq(1000L, 0L)), (0, 0, Seq(1000L, 0L)), (0, 0, null: Seq[Long]),
+        (0, 1, Seq(0L, 1000L)))
+      .toDF("sub", "code", "sv")
+    val got = Similarity.flooredMean(asg, Seq("sub", "code"), "sv", "scv", "scn")
+      .select("code", "scv", "scn").as[(Int, Seq[Long], Long)].collect().sortBy(_._1).toSeq
+    assert(got == Seq((0, Seq(1000L, 0L), 1000000L), (1, Seq(0L, 1000L), 1000000L)), s"got $got")
+  }
+
+  test("ivf: an empty centroid table fails loudly instead of assigning cid = null") {
+    // no vec_id below numCentroids, so the seed matches nothing
+    val items = Seq((10L, Seq(1.0f, 0.0f)), (11L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    val err = intercept[Exception] {
+      Similarity.ivfTopK(items, items, k = 2, numCentroids = 2).collect()
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("empty centroid table")), s"got $err")
+  }
+
   test("temperatureSample: smallest group kept whole; dominant group follows the exact sqrt rule") {
     // group g0: 64 docs, g1: 4 docs -> n_min = 4; keep d in g0 iff
     // h(d)^2 * 64 < 4e6 i.e. h < 250 (exactly the alpha=1/2 rate)

@@ -1,5 +1,8 @@
 package graft.spark
 
+import java.lang.management.ManagementFactory
+import scala.io.Source
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkEntry
@@ -34,6 +37,22 @@ class QueriesSpec extends AnyFunSuite {
     val r = SparkEntry.queries("extract_parity")(spark, sf).head()
     assert(r.getLong(0) == r.getLong(1),
       s"docs=${r.getLong(0)} matched=${r.getLong(1)}")
+  }
+
+  test("a repeated run of the dedup pair queries compiles no new classes (codegen cache fits)") {
+    // a child JVM, so the shipped session is the first to generate code
+    // whatever order the suites run in (the cache size is JVM-wide)
+    val jvm = ManagementFactory.getRuntimeMXBean
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++
+      jvm.getInputArguments.asScala.filterNot(_.startsWith("-Xmx")) ++
+      Seq("-Xmx1g", "-cp", jvm.getClassPath, CodegenReuseProbe.getClass.getName.stripSuffix("$"), sf)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = Source.fromInputStream(proc.getInputStream).getLines().toVector
+    assert(proc.waitFor() == 0, s"probe failed:\n${out.takeRight(40).mkString("\n")}")
+    val counts = out.find(_.startsWith(CodegenReuseProbe.Marker))
+      .getOrElse(fail(s"no probe result:\n${out.takeRight(40).mkString("\n")}"))
+    val second = "second=(\\d+)".r.findFirstMatchIn(counts).get.group(1).toLong
+    assert(second == 0L, s"second run recompiled generated classes: $counts")
   }
 
   test("oracle SQL only references md5 for hashing (cross-engine rule)") {
